@@ -57,12 +57,10 @@ class EngineConfig:
     # 'mor' appends batch-reduced overlay files (write cost O(delta));
     # 'cow' rewrites touched buckets (read-optimal). See LakeTable.merge.
     merge_mode: str = "mor"
-    # mor overlay layout: 'bucket' (one file per touched bucket — sharp
-    # bucket-pruned reads) or 'global' (plain coalesced files, bucket=-1 —
-    # write cost independent of num_buckets; the small-batch/low-traffic-
-    # table fast path, folded back to bucketed files on the compaction
-    # cadence). See LakeTable.merge.
-    overlay: str = "bucket"
+    # mor overlay layout: 'global' is the only one (plain files at the
+    # session's shuffle width, bucket=-1, folded back to bucketed files on
+    # the compaction cadence); anything else raises. See LakeTable.merge.
+    overlay: str = "global"
     # fold merge-on-read overlays into base files every N batches
     # (reference hygiene analog: staging truncation each cycle,
     # pipeline_management.py:1106-1120). None = caller-managed.
@@ -73,8 +71,12 @@ class EngineConfig:
     # expire_snapshots analog). None = keep full history (time travel).
     expire_snapshots_keep: int | None = None
     # on the compaction cadence, purge tombstones every feed partition has
-    # passed (event id < min(checkpointed offsets)) from the buckets being
-    # rewritten anyway — opportunistic, O(0) extra I/O. SAFETY: the purge
+    # passed (event id < min(checkpointed offsets)) from the compaction
+    # rewrite — O(0) extra I/O. ASSUMES A FIXED SET OF FEED PARTITIONS:
+    # the horizon covers only partitions that have committed an offset, so
+    # a partition that joins later starts below it (its offset filter
+    # defaults to -1) and an event of it that would have
+    # lost to a purged tombstone brings the deleted key back. SAFETY: the purge
     # only fires when the table's primary LWW order column IS the LSN
     # (order_col=None at create time ⇒ order_cols[0] == _event_id). Under
     # any other order column the horizon is NOT sufficient: a future event
@@ -97,13 +99,12 @@ class EngineConfig:
     # winner-then-extract ≡ extract-then-winner.
     pre_reduce: bool = True
     # HOW the pre-reduce moves data. 'shuffle' = lww_agg (one wide
-    # exchange of the full payload — also what bucket-aligns the rows, so
-    # it does double duty for bucketed overlay writes). 'broadcast' =
-    # lww_semijoin: winner coordinates from a column-pruned scan,
-    # broadcast LEFT SEMI back — the KB-size html/text payload never
-    # enters a shuffle OR an aggregation buffer. Only sound when the
-    # write needs no bucket alignment (mor + global overlay) and the
-    # winner set fits a broadcast.
+    # exchange of the full payload — also what bucket-aligns the rows for
+    # a cow write). 'broadcast' = lww_semijoin: winner coordinates from a
+    # column-pruned scan, broadcast LEFT SEMI back — the KB-size html/text
+    # payload never enters a shuffle OR an aggregation buffer. Only sound
+    # when the write needs no bucket alignment (mor, whose overlays are
+    # global) and the winner set fits a broadcast.
     #
     # Which is faster is payload-width-dependent (interleaved A/B,
     # 300k-event batches, BASELINE.md round 5): at ~8.5 KB pages the
@@ -141,6 +142,10 @@ class EngineConfig:
     # data_processing.py:124-190). None = off (rows still dropped safely
     # by the merge's null-key filter).
     quarantine_dir: str | None = None
+
+    def __post_init__(self):
+        if self.overlay != "global":
+            raise ValueError(f"unknown overlay layout: {self.overlay!r} (only 'global')")
 
 
 class CdcEngine:
@@ -277,39 +282,24 @@ class CdcEngine:
         cfg = self.cfg
         if cfg.lww_strategy == "shuffle":
             return False
-        if not (cfg.merge_mode == "mor" and cfg.overlay == "global"):
-            # bucketed writes need the shuffle anyway (it bucket-aligns)
+        if cfg.merge_mode != "mor":
+            # cow writes need the shuffle anyway (it bucket-aligns)
             return False
         if cfg.lww_strategy == "broadcast":
             return True
         if cfg.lww_strategy != "auto":
             raise ValueError(f"unknown lww_strategy: {cfg.lww_strategy!r}")
-        if known_rows is not None:
-            rows = known_rows
-        else:
-            # no sound size bound for this batch (fresh engine on the
-            # offset-less path, or a caller that knows neither poll size
-            # nor offsets): the always-safe shuffle plan. A prior-batch
-            # estimate was used here once (last_applied × 2) and rejected:
-            # a backlog catch-up batch far beyond steady state would
-            # silently take the broadcast plan and risk failing the job on
-            # the broadcast size cap — apply_batch instead derives a SOUND
-            # upper bound from the checkpointed-offset gap when the source
-            # reports offsets (LSNs are unique, so per-partition
-            # new − committed bounds the batch's row count from above).
-            return False
-        if rows > cfg.lww_broadcast_max_keys:
+        if known_rows is None or known_rows > cfg.lww_broadcast_max_keys:
+            # no sound size bound for this batch (a prior-batch estimate
+            # was tried and rejected: a backlog catch-up batch would
+            # silently take the broadcast plan past its size cap), or a
+            # bound beyond the cap: the always-safe shuffle plan
             return False
         if not cfg.lww_broadcast_row_bytes:
             return True
         # width signal: measured bytes/row from the previous merge's own
-        # written files — one unit system, stat'd by the engine itself.
-        # (A Catalyst sizeInBytes estimate was tried and rejected: it
-        # overstates width whenever a non-pushable filter — the
-        # literal-map offset predicate — carries no selectivity, and its
-        # units don't line up with the measured threshold.) No
-        # measurement yet (first batch of a fresh engine) → the
-        # always-safe shuffle plan.
+        # written files (see __init__). No measurement yet (first batch of
+        # a fresh engine) → the always-safe shuffle plan.
         if self._last_row_bytes is None:
             return False
         return self._last_row_bytes >= cfg.lww_broadcast_row_bytes
@@ -438,7 +428,6 @@ class CdcEngine:
             batch_id=batch_id,
             op_col=self.cfg.op_col,
             mode=self.cfg.merge_mode,
-            overlay=self.cfg.overlay,
             # pre_reduce already left one winner per key — the merge can
             # skip its in-batch reduction (one agg pass over the batch)
             delta_reduced=self.cfg.pre_reduce,
@@ -484,10 +473,13 @@ class CdcEngine:
         re-parsing the whole state document every batch is a per-batch
         fixed cost that grows with history. On the cadence it also
         (a) purges passed tombstones from the rewrite (``gc_tombstones``;
-        horizon = min checkpointed offset — every feed partition has
-        advanced past it and the offset filter drops any replay below it;
-        ONLY when the table's LWW order is the LSN itself, see
-        ``_gc_safe``) and (b) expires old snapshots when configured."""
+        horizon = min checkpointed offset — every feed partition that has
+        committed has advanced past it and the offset filter drops any
+        replay below it; ONLY when the table's LWW order is the LSN itself,
+        see ``_gc_safe``) and (b) expires old snapshots when configured.
+        The horizon assumes a fixed set of feed partitions: a partition
+        that first appears after a purge starts below the horizon, and its
+        events can bring a deleted key back."""
         if not (self.cfg.compact_every and self.cfg.merge_mode == "mor"):
             return metrics
         if self._n_batches is None:

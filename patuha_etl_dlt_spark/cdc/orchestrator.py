@@ -29,6 +29,8 @@ the compaction cadence.
 from __future__ import annotations
 
 import dataclasses
+import decimal
+import math
 import os
 import time
 from concurrent.futures import ThreadPoolExecutor
@@ -80,7 +82,22 @@ def _json_cursor(v):
     Python's ``str()`` form (``YYYY-MM-DD HH:MM:SS[.ffffff]`` — fractions
     are absent or exactly 6 digits, so lexicographic order equals time
     order, keeping the checkpoint's monotone-max guard correct); ints,
-    floats and strings pass through unchanged."""
+    floats and strings pass through unchanged. Decimals stay NUMERIC (a
+    ``str()`` would compare lexicographically, "10" < "9", and fail the
+    cursor type check): an int when integral (exact), else the nearest
+    float. Up to 15 significant digits (as the value carries them, i.e.
+    at its column's scale) distinct decimals map to distinct doubles, so
+    that float compares exactly — as a double (Spark coerces
+    ``decimal > double`` to double) and as its SQL literal (``repr``).
+    Wider values can share a double with the cursor, and a source that
+    compares as double would skip them; the float is then stepped one ulp
+    down, so every value above the cursor compares above it. The
+    boundary rows that re-pulls each cycle are absorbed by the LWW merge."""
+    if isinstance(v, decimal.Decimal):
+        if v == v.to_integral_value():
+            return int(v)
+        f = float(v)
+        return math.nextafter(f, -math.inf) if len(v.as_tuple().digits) > 15 else f
     if v is None or isinstance(v, (int, float, str)):
         return v
     return str(v)
@@ -282,10 +299,9 @@ class SyncOrchestrator:
                     # size the diff's full-outer-join shuffle from the
                     # TABLE's bytes, not the session constant (the round-5
                     # 32 M-row spill cliff); AQE coalesces the excess when
-                    # the table is small. A bucketed-overlay merge re-pins
-                    # its WRITE to num_buckets inside (its own documented
-                    # trade); the global-overlay path runs entirely at
-                    # this width.
+                    # the table is small. A mor merge runs its whole plan
+                    # (diff join and overlay write) at this width; a cow
+                    # merge re-pins its bucketed write to num_buckets.
                     diff_width = diff_shuffle_partitions(
                         eng.table,
                         int(self.spark.conf.get("spark.sql.shuffle.partitions")),
@@ -304,7 +320,6 @@ class SyncOrchestrator:
                             batch_id=bid,
                             op_col=eng.cfg.op_col,
                             mode=eng.cfg.merge_mode,
-                            overlay=eng.cfg.overlay,
                             # diff output is key-unique by construction (one
                             # full-outer join on the keys of two key-unique
                             # snapshots) — the merge can skip its in-batch
@@ -367,7 +382,6 @@ class SyncOrchestrator:
                     batch_id=bid,
                     op_col=eng.cfg.op_col,
                     mode=eng.cfg.merge_mode,
-                    overlay=eng.cfg.overlay,
                 )
                 if m.get("skipped"):
                     # crash heal: MERGE landed in a previous attempt but the

@@ -34,8 +34,10 @@ Spark-first design:
 
 from __future__ import annotations
 
+import functools
 import glob
 import json
+import operator
 import os
 import threading
 from contextlib import contextmanager
@@ -68,28 +70,22 @@ _CONF_LOCK = threading.RLock()
 
 
 @contextmanager
-def _pinned_shuffle_conf(spark: SparkSession, num_buckets: int, coalesce_knob: str | None = None):
-    """Run a write job with ``spark.sql.shuffle.partitions == num_buckets``
-    (and optionally the AQE coalesce flag pinned), restoring the previous
-    session conf afterwards — leak-free under concurrent callers."""
+def _pinned_shuffle_conf(spark: SparkSession, num_buckets: int):
+    """Run a write job with ``spark.sql.shuffle.partitions == num_buckets``,
+    restoring the previous session conf afterwards — leak-free under
+    concurrent callers."""
     conf = spark.conf
-    target_sp = str(num_buckets)
-    cur_sp = conf.get("spark.sql.shuffle.partitions")
-    cur_co = conf.get("spark.sql.adaptive.coalescePartitions.enabled")
-    want_co = cur_co if coalesce_knob is None else coalesce_knob
-    if cur_sp == target_sp and want_co == cur_co:
+    target = str(num_buckets)
+    if conf.get("spark.sql.shuffle.partitions") == target:
         yield
         return
     with _CONF_LOCK:
-        prev_sp = conf.get("spark.sql.shuffle.partitions")
-        prev_co = conf.get("spark.sql.adaptive.coalescePartitions.enabled")
+        prev = conf.get("spark.sql.shuffle.partitions")
         try:
-            conf.set("spark.sql.shuffle.partitions", target_sp)
-            conf.set("spark.sql.adaptive.coalescePartitions.enabled", want_co)
+            conf.set("spark.sql.shuffle.partitions", target)
             yield
         finally:
-            conf.set("spark.sql.shuffle.partitions", prev_sp)
-            conf.set("spark.sql.adaptive.coalescePartitions.enabled", prev_co)
+            conf.set("spark.sql.shuffle.partitions", prev)
 
 
 def _order_null_literal(typ: str):
@@ -241,15 +237,19 @@ class LakeTable:
 
     # --------------------------------------------------------------- reads
 
-    def _bucket_expr(self, snap: Snapshot):
+    def _bucket_expr(self, snap: Snapshot, keys=None):
         """Bucket assignment = Spark's own shuffle placement:
         ``pmod(murmur3_hash(keys), B)`` is exactly HashPartitioning's
         partition-id expression, so when a job runs with
         ``spark.sql.shuffle.partitions == num_buckets``, a groupBy/join on
         the keys lands every row in its bucket's partition — the bucketed
         write then needs NO extra repartition (one data shuffle saved per
-        MERGE, and files come out one-per-bucket)."""
-        return F.pmod(F.hash(*[F.col(k) for k in snap.key_cols]), F.lit(snap.num_buckets))
+        COW merge or compaction, and files come out one-per-bucket).
+        ``keys``: expressions standing in for the key columns (default:
+        the columns themselves); they must carry the key columns' lake
+        types, because murmur3(int) != murmur3(long)."""
+        keys = keys or [F.col(k) for k in snap.key_cols]
+        return F.pmod(F.hash(*keys), F.lit(snap.num_buckets))
 
     def _align(self, df: DataFrame, schema: Schema, from_schema: Schema | None = None) -> DataFrame:
         """Project ``df`` to ``schema``: id-map names (when ``from_schema``
@@ -304,38 +304,28 @@ class LakeTable:
             .select(*snap.key_cols, *[F.col(f"_w.{c}").alias(c) for c in payload])
         )
 
-    def _resolved(
-        self, snap: Snapshot, files: list[DataFile], wanted_buckets=None
-    ) -> DataFrame:
-        """Merge-on-read resolution: buckets without delta overlays stream
-        straight from their base files; buckets WITH overlays are
-        LWW-reduced across base ∪ delta. Tombstones retained.
+    def _resolved(self, snap: Snapshot, files: list[DataFile], where=None) -> DataFrame:
+        """Merge-on-read resolution: with no overlay among ``files`` they
+        are already one resolved row per key and stream straight from the
+        scan; any ``delta`` file (a global overlay, ``bucket == -1``, or a
+        bucketed overlay from an older version of this table format)
+        LWW-reduces ALL of them until compaction folds it. Tombstones
+        retained. ``where``: a row predicate applied to every file BEFORE
+        the reduce, so a pruned read (bucket- or key-filtered) reduces only
+        the rows it returns — the aggregate would otherwise block the
+        filter from reaching the scans."""
+        df = self._read_files(snap, files)
+        if where is not None:
+            df = df.filter(where)
+        return self._lww_reduce(snap, df) if any(f.kind == "delta" for f in files) else df
 
-        GLOBAL overlays (``bucket == -1``) overlap every bucket, so their
-        presence marks all buckets dirty until compaction folds them (the
-        documented read-cost trade of the small-batch write path). When
-        ``wanted_buckets`` is given (a bucket-pruned read), overlay rows
-        outside those buckets are filtered out by the bucket expression —
-        the overlay files themselves are scanned (they are small, recent
-        batches), but the rest of the table stays file-pruned."""
-        globals_ = [f for f in files if f.bucket == -1]
-        rest = [f for f in files if f.bucket != -1]
-        if globals_:
-            overlay = self._read_files(snap, globals_)
-            if wanted_buckets is not None:
-                overlay = overlay.filter(
-                    self._bucket_expr(snap).isin([int(b) for b in wanted_buckets])
-                )
-            return self._lww_reduce(
-                snap, self._read_files(snap, rest).unionByName(overlay)
-            )
-        dirty = {f.bucket for f in rest if f.kind == "delta"}
-        clean_files = [f for f in rest if f.bucket not in dirty]
-        dirty_files = [f for f in rest if f.bucket in dirty]
-        out = self._read_files(snap, clean_files)
-        if dirty_files:
-            out = out.unionByName(self._lww_reduce(snap, self._read_files(snap, dirty_files)))
-        return out
+    @staticmethod
+    def _visible(df: DataFrame, include_deleted: bool, include_system: bool) -> DataFrame:
+        if not include_deleted:
+            df = df.filter(~F.coalesce(F.col(SYS_DELETED), F.lit(False)))
+        if not include_system:
+            df = df.drop(*SYS_COLS)
+        return df
 
     def read(
         self,
@@ -350,12 +340,13 @@ class LakeTable:
             if snapshot_version is None
             else M.read_snapshot(self.meta_dir, snapshot_version)
         )
-        df = self._resolved(snap, snap.files)
-        if not include_deleted:
-            df = df.filter(~F.coalesce(F.col(SYS_DELETED), F.lit(False)))
-        if not include_system:
-            df = df.drop(*SYS_COLS)
-        return df
+        return self._visible(self._resolved(snap, snap.files), include_deleted, include_system)
+
+    def _pruned(self, snap: Snapshot, buckets, where, include_deleted: bool, include_system: bool):
+        """Resolve the given buckets' files plus every global overlay (they
+        overlap every bucket), rows filtered by ``where`` before the reduce."""
+        files = [f for f in snap.files if f.bucket in buckets or f.bucket == -1]
+        return self._visible(self._resolved(snap, files, where), include_deleted, include_system)
 
     def read_buckets(
         self,
@@ -369,39 +360,61 @@ class LakeTable:
         ``pmod(hash(keys), num_buckets)`` (see ``_bucket_expr``); callers
         that know which keys they need (e.g. the incremental-rollup fold)
         compute the touched buckets from those keys and skip the rest of
-        the table entirely — O(touched state), not O(state)."""
+        the table entirely — O(touched state), not O(state). Global
+        overlay files are scanned too, filtered to the wanted buckets."""
         snap = self.snapshot
-        wanted = set(buckets)
-        df = self._resolved(
-            snap,
-            [f for f in snap.files if f.bucket in wanted or f.bucket == -1],
-            wanted_buckets=wanted,
+        wanted = {int(b) for b in buckets}
+        where = None
+        if any(f.bucket == -1 for f in snap.files):
+            # only overlay rows can lie outside the wanted buckets
+            where = self._bucket_expr(snap).isin(sorted(wanted))
+        return self._pruned(snap, wanted, where, include_deleted, include_system)
+
+    def _key_literals(self, snap: Snapshot, keys) -> list[list]:
+        """Key values (tuples for composite keys) as literals cast to the
+        key columns' lake types."""
+        types = {f.name: M.spark_type(f.type) for f in snap.schema.fields}
+        rows = [k if isinstance(k, tuple) else (k,) for k in keys]
+        return [[F.lit(v).cast(types[k]) for k, v in zip(snap.key_cols, r)] for r in rows]
+
+    def _literal_buckets(self, snap: Snapshot, lits: list[list]) -> list[int]:
+        """Bucket of each literal key, from the writer's own
+        ``_bucket_expr`` evaluated over an inline one-row table: it is
+        constant-folded to a ``LocalTableScan``, so no Spark job runs
+        (``SELECT 1`` would run one)."""
+        if not lits:
+            return []
+        row = self.spark.sql("VALUES (1)").select(
+            F.array(*[self._bucket_expr(snap, kl) for kl in lits])
         )
-        if not include_deleted:
-            df = df.filter(~F.coalesce(F.col(SYS_DELETED), F.lit(False)))
-        if not include_system:
-            df = df.drop(*SYS_COLS)
-        return df
+        return row.first()[0]
 
     def lookup(self, keys, include_system: bool = False) -> DataFrame:
         """Point lookup: current rows for the given key values, reading
-        ONLY the buckets those keys hash into — the CDC operator's "did
-        url X land?" read, O(keys/num_buckets · state) instead of a full
-        scan. ``keys``: list of key values (tuples for composite keys).
-        Buckets are computed with the same `_bucket_expr` the writer used
-        (one driver-local job over the tiny key list — never a table
-        scan), then the pruned read is semi-joined back to the keys."""
+        ONLY the buckets those keys hash into plus the global overlays —
+        the CDC operator's "did url X land?" read, O(keys/num_buckets ·
+        state) instead of a full scan. ``keys``: list of key values
+        (tuples for composite keys). Buckets are computed without a Spark
+        job (see ``_literal_buckets``) and the key predicate filters every
+        file below the LWW reduce (pushed into the Parquet scans)."""
         snap = self.snapshot
-        rows = [k if isinstance(k, tuple) else (k,) for k in keys]
-        kfields = [next(f for f in snap.schema.fields if f.name == kc) for kc in snap.key_cols]
-        kdf = self.spark.createDataFrame(
-            rows, ", ".join(f"{f.name} {f.type}" for f in kfields)
-        )
-        buckets = {
-            r[0] for r in kdf.select(self._bucket_expr(snap).alias("b")).distinct().collect()
-        }
-        df = self.read_buckets(buckets, include_system=include_system)
-        return df.join(F.broadcast(kdf), snap.key_cols, "semi")
+        lits = self._key_literals(snap, keys)
+        if len(snap.key_cols) == 1:
+            # one flat IN, not an OR chain as deep as the key list
+            where = F.col(snap.key_cols[0]).isin([kl[0] for kl in lits])
+        else:
+            where = functools.reduce(
+                operator.or_,
+                [
+                    functools.reduce(
+                        operator.and_, [F.col(k) == v for k, v in zip(snap.key_cols, kl)]
+                    )
+                    for kl in lits
+                ],
+                F.lit(False),
+            )
+        buckets = set(self._literal_buckets(snap, lits))
+        return self._pruned(snap, buckets, where, False, include_system)
 
     # -------------------------------------------------------------- writes
 
@@ -411,28 +424,28 @@ class LakeTable:
         df: DataFrame,
         distribute: bool = True,
         kind: str = "base",
-        layout: str = "bucketed",
     ) -> list[DataFile]:
         """Write ``df`` (already aligned to snap.schema); return the new
         DataFile entries.
 
-        ``layout='bucketed'`` (default): one Hive partition dir per bucket.
+        ``kind='base'``: one Hive partition dir per bucket.
         ``distribute=True`` (Iceberg's hash write-distribution mode)
         repartitions by bucket first so each bucket is exactly one file —
         without it, every shuffle task writes a file into every bucket it
         sees, and the resulting task×bucket file explosion dominates merge
         cost (measured 4-6× slower at 64 buckets).
 
-        ``layout='plain'``: a GLOBAL overlay — no bucket column, no
+        ``kind='delta'``: a GLOBAL overlay — no bucket column, no
         ``partitionBy``, files recorded with ``bucket == -1`` (meaning
-        "overlaps every bucket"). This removes the O(num_buckets)
-        per-batch floor (dynamic-partition writer setup + one file commit
-        per bucket — profiled at ~2 s @64 buckets for a tiny merge,
-        BASELINE.md round 3) for batches far smaller than the bucket
-        count; compaction folds overlays back into bucketed base files."""
+        "overlaps every bucket"), written at the session's own shuffle
+        width. There is no O(num_buckets) per-batch floor (dynamic-partition
+        writer setup + one file commit per bucket — profiled at ~2 s @64
+        buckets for a tiny merge, BASELINE.md round 3) and no plan pinned
+        to num_buckets partitions; compaction folds overlays back into
+        bucketed base files."""
         rel = M.new_data_dir(self.root)
         out = os.path.join(self.root, rel)
-        if layout == "plain":
+        if kind == "delta":
             df.write.mode("overwrite").parquet(out)
             return [
                 DataFile(os.path.relpath(p, self.root), -1, snap.schema_id, kind)
@@ -500,7 +513,7 @@ class LakeTable:
         op_col: str | None = "op",
         collect_metrics: bool = True,
         mode: str = "mor",
-        overlay: str = "bucket",
+        overlay: str = "global",
         delta_reduced: bool = False,
     ) -> dict:
         """Key-partitioned MERGE of a change-event delta into the table.
@@ -516,26 +529,22 @@ class LakeTable:
         ``mode`` (the Iceberg copy-on-write vs merge-on-read choice):
 
         - ``'mor'`` (default): the batch-reduced delta is APPENDED as
-          overlay files; reads LWW-resolve overlays against base. Write
-          cost per batch is O(delta), not O(touched table state) — the
-          right default for a write-heavy CDC tail. Compaction
-          (``compact_deltas``) folds overlays down on a schedule.
+          global overlay files (``bucket == -1``, see ``_write_files``);
+          reads LWW-resolve overlays against base. Write cost per batch is
+          O(delta), not O(touched table state), and the whole plan runs at
+          the session's own shuffle width — the right default for a
+          write-heavy CDC tail. Compaction (``compact_deltas``) folds
+          overlays into one base file per bucket on a schedule; until then
+          bucket-pruned reads and lookups scan (but filter) every overlay.
         - ``'cow'``: touched buckets are rewritten to one resolved base
-          file each — read-optimal, write-amplified.
+          file each — read-optimal, write-amplified. The write runs with
+          shuffle partitions == num_buckets (see ``_bucket_expr``).
 
         Because the LWW reduction is associative/commutative, both modes
         produce identical read() results in any mixture.
 
-        ``overlay`` (mor only): ``'bucket'`` (default) writes the batch
-        bucket-partitioned — one file per touched bucket, bucket-pruned
-        reads stay sharp, but a TINY batch still pays the O(num_buckets)
-        dynamic-partition writer floor. ``'global'`` writes the batch as
-        plain coalesced files tagged ``bucket=-1``: write cost is
-        O(batch) regardless of bucket count (the small-batch/low-traffic-
-        table fast path); until compaction folds them, reads LWW-resolve
-        every bucket and bucket-pruned reads must scan (but filter) the
-        overlay files. Both overlays mix freely and compaction restores
-        the pristine one-file-per-bucket layout.
+        ``overlay``: ``'global'``, the only merge-on-read layout (kept so
+        callers may name it; anything else raises).
 
         ``delta_reduced``: promise that ``delta`` already carries at most
         ONE row per key (e.g. the engine's pre-extraction LWW reduce). The
@@ -546,6 +555,8 @@ class LakeTable:
         Returns a metrics dict; a re-applied ``batch_id`` short-circuits to
         ``{"skipped": True}`` (exactly-once).
         """
+        if overlay != "global":
+            raise ValueError(f"unknown overlay layout: {overlay!r} (only 'global')")
         snap = self.snapshot
         if batch_id and batch_id in snap.batch_ids:
             return {"skipped": True, "batch_id": batch_id}
@@ -605,51 +616,14 @@ class LakeTable:
                 F.sum(F.col(SYS_DELETED).cast("long")).alias("tombstones"),
             )
 
-        # run the merge job with shuffle partitions == num_buckets: the
-        # reduce's output partitioning — Hash(keys, num_buckets) — IS the
-        # bucket function (see _bucket_expr), so the bucketed file write
-        # needs NO further repartition; each row moves through exactly one
-        # shuffle and files land one per touched bucket.
-        #
-        # AQE partition coalescing stays governed by the session (default
-        # ON): an interleaved A/B (see BASELINE.md) measured coalescing-off
-        # 15-35% SLOWER at both 4 and 16 cores on small batches — packing
-        # post-shuffle partitions to ~64 MB beats raw 64-way parallelism
-        # (fewer pandas-UDF worker invocations, fewer tiny files). The
-        # spark.patuha.merge.aqeCoalesce knob exists to re-test this
-        # trade-off on other hardware.
-        if mode == "mor" and overlay == "global":
-            # plain write: no bucket partitioning to satisfy, so no session
-            # conf to pin — the write runs at the session's own shuffle
-            # width with AQE packing partitions to target size
-            new_files = self._write_files(
-                snap, winners, distribute=False, kind="delta", layout="plain"
-            )
-        elif (
-            self.spark.conf.get("spark.patuha.merge.writeWidth", "buckets") == "session"
-        ):
-            # bucketed write WITHOUT pinning the whole plan to num_buckets
-            # partitions: the upstream reduce/UDF stages run at the
-            # session's natural width and an EXPLICIT repartition places
-            # rows into their buckets just before the write. Trade: one
-            # extra shuffle of the reduced winners vs a plan whose
-            # parallelism is divorced from the executor count — the right
-            # side of the trade when cores << num_buckets (a 64-wide
-            # pandas-UDF stage on 4 cores churns ~40 python workers,
-            # measured ~2× slower batches) or cores >> num_buckets (a
-            # 64-partition plan starves a 1000-core cluster).
-            new_files = self._write_files(
-                snap, winners, distribute=True, kind="delta" if mode == "mor" else "base"
-            )
+        if mode == "mor":
+            new_files = self._write_files(snap, winners, kind="delta")
         else:
-            merge_coalesce = self.spark.conf.get(
-                "spark.patuha.merge.aqeCoalesce",
-                self.spark.conf.get("spark.sql.adaptive.coalescePartitions.enabled"),
-            )
-            with _pinned_shuffle_conf(self.spark, snap.num_buckets, merge_coalesce):
-                new_files = self._write_files(
-                    snap, winners, distribute=False, kind="delta" if mode == "mor" else "base"
-                )
+            # the reduce's output partitioning — Hash(keys, num_buckets) —
+            # IS the bucket function (see _bucket_expr), so the bucketed
+            # write needs no further repartition: one file per bucket
+            with _pinned_shuffle_conf(self.spark, snap.num_buckets):
+                new_files = self._write_files(snap, winners, distribute=False)
         files = kept_files + new_files
         metrics: dict = {
             "skipped": False,
@@ -711,57 +685,38 @@ class LakeTable:
         self._commit(snap, kept + new_files, batch_id, {"operation": "replace_buckets", **metrics})
         return metrics
 
-    def compact_deltas(
-        self,
-        max_delta_files_per_bucket: int = 0,
-        purge_tombstones_below: int | None = None,
-    ) -> int:
-        """Fold merge-on-read overlays into base files: every bucket with
-        more than ``max_delta_files_per_bucket`` overlay files is rewritten
-        to one resolved base file (Iceberg rewrite_data_files +
-        rewrite_position_delete_files analog). Returns buckets compacted.
+    def compact_deltas(self, purge_tombstones_below: int | None = None) -> int:
+        """Fold merge-on-read overlays into base files: when the table has
+        any overlay file, the whole table is rewritten to one resolved base
+        file per bucket (Iceberg rewrite_data_files +
+        rewrite_position_delete_files analog) — a global overlay overlaps
+        every bucket. Returns the number of distinct buckets folded (the
+        overlays count as one), 0 when there was nothing to fold.
 
         ``purge_tombstones_below``: additionally drop tombstone rows whose
-        event id is below this horizon from the buckets being rewritten
-        anyway — zero extra I/O vs a standalone ``compact_tombstones``
-        full rewrite. Safe ONLY when the table's LWW order is LSN-monotone
-        per key — in particular when ``order_cols[0]`` is the ``_event_id``
-        lineage column itself (the engine's ``gc_tombstones`` checks this
-        before passing a horizon). With a business order column, a future
-        above-horizon event can carry an older/NULL order value and LOSE
-        the LWW race to a below-horizon tombstone; purging that tombstone
-        would resurrect the key. Callers with such tables must vouch for
-        their own horizon.
-        Tombstones in buckets this fold does not touch survive until their
-        bucket next compacts — opportunistic GC; buckets that keep
-        receiving deletes keep getting folded, which bounds growth exactly
-        where growth happens."""
+        event id is below this horizon from the rewrite — zero extra I/O vs
+        a standalone ``compact_tombstones`` full rewrite. Safe ONLY when the
+        table's LWW order is LSN-monotone per key — in particular when
+        ``order_cols[0]`` is the ``_event_id`` lineage column itself (the
+        engine's ``gc_tombstones`` checks this before passing a horizon).
+        With a business order column, a future above-horizon event can
+        carry an older/NULL order value and LOSE the LWW race to a
+        below-horizon tombstone; purging that tombstone would resurrect the
+        key. Callers with such tables must vouch for their own horizon."""
         snap = self.snapshot
-        if any(f.bucket == -1 for f in snap.files):
-            # a global overlay overlaps every bucket: fold the whole table
-            # back to the pristine one-file-per-bucket layout
-            targets = {f.bucket for f in snap.files} | {-1}
-            to_rewrite, kept = list(snap.files), []
-        else:
-            per_bucket: dict[int, int] = {}
-            for f in snap.files:
-                if f.kind == "delta":
-                    per_bucket[f.bucket] = per_bucket.get(f.bucket, 0) + 1
-            targets = {b for b, n in per_bucket.items() if n > max_delta_files_per_bucket}
-            if not targets:
-                return 0
-            to_rewrite = [f for f in snap.files if f.bucket in targets]
-            kept = [f for f in snap.files if f.bucket not in targets]
-        resolved = self._resolved(snap, to_rewrite)
+        if not any(f.kind == "delta" for f in snap.files):
+            return 0
+        resolved = self._resolved(snap, snap.files)
         if purge_tombstones_below is not None:
             resolved = resolved.filter(
                 (~F.coalesce(F.col(SYS_DELETED), F.lit(False)))
                 | (F.coalesce(F.col(SYS_EVENT), F.lit(-1)) >= F.lit(int(purge_tombstones_below)))
             )
+        folded = len({f.bucket for f in snap.files})
         with _pinned_shuffle_conf(self.spark, snap.num_buckets):
-            files = kept + self._write_files(snap, resolved, distribute=False)
-        self._commit(snap, files, None, {"operation": "compact_deltas", "buckets": len(targets)})
-        return len(targets)
+            files = self._write_files(snap, resolved, distribute=False)
+        self._commit(snap, files, None, {"operation": "compact_deltas", "buckets": folded})
+        return folded
 
     # ----------------------------------------------------- schema evolution
 
@@ -859,7 +814,7 @@ class LakeTable:
         """Bin-pack small files: rewrite every bucket that has more than
         ``max_files_per_bucket`` files into one file (Iceberg's
         rewrite_data_files analog). Returns buckets compacted. Needed when
-        appends/AQE-split writes fragment a bucket; MERGE itself already
+        appends/AQE-split writes fragment a bucket; a COW merge already
         writes one file per touched bucket."""
         snap = self.snapshot
         if any(f.bucket == -1 for f in snap.files):

@@ -714,10 +714,6 @@ def test_broadcast_lww_strategy_converges_and_auto_promotes(spark, tmp_path, fee
     )
     assert plans_ap == ["broadcast"] * 3
 
-    # bucketed overlay needs the aligning shuffle: auto must refuse
-    _, plans_bk = run(EngineConfig(overlay="bucket", lww_broadcast_row_bytes=0), "bk")
-    assert plans_bk == ["shuffle"] * 3
-
     # row-bytes gate: narrow payloads (this feed) stay on the shuffle
     # plan under an impossible width threshold; the rows cap also demotes
     _, plans_wd = run(EngineConfig(overlay="global", lww_broadcast_row_bytes=10**9), "wd")
@@ -739,7 +735,7 @@ def test_broadcast_lww_strategy_converges_and_auto_promotes(spark, tmp_path, fee
 def test_lww_gate_decision_boundary_property():
     """VERDICT r5 #8 (unit half): Hypothesis over the auto gate's inputs —
     broadcast is chosen ONLY when every eligibility condition holds
-    (mor+global, rows within cap, width measured and at/above threshold
+    (mor, rows within cap, width measured and at/above threshold
     unless disabled), and explicit strategies behave as declared. Pure
     unit: the gate reads no Spark state."""
     from hypothesis import given
@@ -748,22 +744,21 @@ def test_lww_gate_decision_boundary_property():
     @given(
         strategy=st.sampled_from(["auto", "shuffle", "broadcast"]),
         merge_mode=st.sampled_from(["mor", "cow"]),
-        overlay=st.sampled_from(["global", "bucket"]),
         known_rows=st.one_of(st.none(), st.integers(min_value=0, max_value=10**8)),
         max_keys=st.integers(min_value=1, max_value=10**7),
         row_bytes_gate=st.integers(min_value=0, max_value=10**5),
         last_row_bytes=st.one_of(st.none(), st.floats(min_value=0, max_value=10**6)),
     )
-    def check(strategy, merge_mode, overlay, known_rows, max_keys, row_bytes_gate, last_row_bytes):
+    def check(strategy, merge_mode, known_rows, max_keys, row_bytes_gate, last_row_bytes):
         cfg = EngineConfig(
-            merge_mode=merge_mode, overlay=overlay, lww_strategy=strategy,
+            merge_mode=merge_mode, lww_strategy=strategy,
             lww_broadcast_max_keys=max_keys, lww_broadcast_row_bytes=row_bytes_gate,
         )
         eng = CdcEngine.__new__(CdcEngine)  # gate needs only cfg + width memo
         eng.cfg = cfg
         eng._last_row_bytes = last_row_bytes
         got = eng._lww_use_broadcast(known_rows)
-        eligible = merge_mode == "mor" and overlay == "global"
+        eligible = merge_mode == "mor"
         if strategy == "shuffle" or not eligible:
             assert got is False
         elif strategy == "broadcast":

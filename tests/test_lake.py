@@ -355,6 +355,7 @@ def test_point_lookup_prunes_buckets(spark, tmp_path):
     )
     rows = [(f"url-{i}", f"v{i}", i) for i in range(400)]
     t.merge(spark.createDataFrame(rows, "k string, v string, seq long"), batch_id="b")
+    t.compact_deltas()  # merges write global overlays; fold to bucketed base
     assert len({f.bucket for f in t.snapshot.files}) == 8
 
     df = t.lookup(["url-7", "url-123", "url-nope"])
@@ -371,9 +372,9 @@ def test_point_lookup_prunes_buckets(spark, tmp_path):
 
 def test_global_overlay_merge_equivalent_and_folds(spark, tmp_path):
     """overlay='global' (the bucket-count-independent small-batch write
-    path) must produce identical read()/read_buckets() state to bucketed
-    overlays, survive tombstones, refuse replace_buckets until folded, and
-    compact back to one file per bucket."""
+    path) must produce identical read()/read_buckets() state to
+    copy-on-write merges, survive tombstones, refuse replace_buckets until
+    folded, and compact back to one file per bucket."""
     batches = [
         [(1, "I", "a", 1, "A1"), (2, "I", "b", 1, "B1"), (3, "I", "c", 1, "C1")],
         [(4, "U", "a", 2, "A2"), (5, "D", "b", 2, ""), (6, "I", "d", 1, "D1")],
@@ -387,7 +388,7 @@ def test_global_overlay_merge_equivalent_and_folds(spark, tmp_path):
     )
     for i, rows in enumerate(batches):
         mg = tg.merge(ev(spark, rows), batch_id=f"b{i}", overlay="global")
-        tb.merge(ev(spark, rows), batch_id=f"b{i}")
+        tb.merge(ev(spark, rows), batch_id=f"b{i}", mode="cow")
         assert mg["skipped"] is False
     want = {"a": "A2", "c": "C1", "d": "D1", "e": "E1"}
     assert state(tg) == state(tb) == want
@@ -423,6 +424,35 @@ def test_global_overlay_merge_equivalent_and_folds(spark, tmp_path):
     assert all(n == 1 for n in per_bucket.values())
     # deleted key 'b' must not resurrect post-fold
     assert "b" not in state(tg)
+
+
+def test_legacy_bucketed_overlay_resolves_and_folds(spark, tmp_path):
+    """Tables written by older versions of the format hold bucketed
+    kind='delta' overlay files; read, lookup and compaction still resolve
+    them against base (tombstone and late event included)."""
+    import dataclasses
+
+    def mk(name):
+        return LakeTable.create(
+            spark, str(tmp_path / name), PAGES, key_cols="url", order_col="warc_ts", num_buckets=4
+        )
+
+    t, newer = mk("t"), mk("newer")
+    t.merge(ev(spark, [(1, "I", "a", 1, "A1"), (2, "I", "b", 1, "B1"), (3, "I", "c", 1, "C1")]), batch_id="b0", mode="cow")
+    newer.merge(ev(spark, [(4, "U", "a", 2, "A2"), (5, "D", "b", 2, ""), (6, "U", "c", 0, "C0")]), batch_id="b1", mode="cow")
+    snap = t.snapshot
+    rows = t._align(newer.read(include_deleted=True, include_system=True), snap.schema)
+    legacy = [dataclasses.replace(f, kind="delta") for f in t._write_files(snap, rows)]
+    assert all(f.bucket >= 0 for f in legacy)
+    t._commit(snap, snap.files + legacy, "b1", {"operation": "merge"})
+
+    want = {"a": "A2", "c": "C1"}
+    assert state(t) == want
+    assert {r["url"]: r["text"] for r in t.lookup(["a", "b", "c"]).collect()} == want
+    assert t.compact_deltas() > 0
+    assert all(f.kind == "base" for f in t.snapshot.files)
+    assert state(t) == want
+    assert t.compact_deltas() == 0
 
 
 def test_global_overlay_then_cow_merge_folds_everything(spark, tmp_path):
@@ -490,31 +520,70 @@ def test_read_buckets_under_global_overlay_still_prunes_base(spark, tmp_path):
             assert path not in opened  # untouched base never opened
 
 
-def test_merge_write_width_session_equivalent(spark, tmp_path):
-    """spark.patuha.merge.writeWidth=session: the batch plan runs at
-    session width with an explicit bucket repartition before the write —
-    state identical to the pinned default, still one file per bucket."""
-    rows1 = [(i, "I", f"u{i}", 1, f"A{i}") for i in range(40)]
-    rows2 = [(100 + i, "U" if i % 3 else "D", f"u{i}", 2, f"B{i}") for i in range(20)]
-    tp = LakeTable.create(
-        spark, str(tmp_path / "wp"), PAGES, key_cols="url", order_col="warc_ts", num_buckets=8
-    )
-    ts_ = LakeTable.create(
-        spark, str(tmp_path / "ws"), PAGES, key_cols="url", order_col="warc_ts", num_buckets=8
-    )
-    tp.merge(ev(spark, rows1), batch_id="b0")
-    tp.merge(ev(spark, rows2), batch_id="b1")
-    spark.conf.set("spark.patuha.merge.writeWidth", "session")
-    try:
-        ts_.merge(ev(spark, rows1), batch_id="b0")
-        ts_.merge(ev(spark, rows2), batch_id="b1")
-    finally:
-        spark.conf.unset("spark.patuha.merge.writeWidth")
-    assert state(tp) == state(ts_)
-    # each commit wrote at most one file per bucket (commit = the
-    # per-write data dir, the second path component)
-    import os
-    from collections import Counter
+LOOKUP_KEY_SHAPES = {
+    "string": [("k", "string")],
+    "int": [("k", "int")],
+    "long": [("k", "long")],
+    "composite": [("a", "string"), ("b", "int")],
+}
 
-    counts = Counter((f.bucket, os.path.dirname(f.path)) for f in ts_.snapshot.files)
-    assert all(v == 1 for v in counts.values())
+
+@pytest.mark.parametrize("shape", sorted(LOOKUP_KEY_SHAPES))
+def test_lookup_matches_filtered_read_property(spark, tmp_path, shape):
+    """On a table mixing bucketed base files, a global overlay and
+    tombstones, lookup(keys) returns exactly read() filtered to those keys;
+    and the job-free literal bucket of every key equals _bucket_expr over a
+    typed DataFrame — murmur3(int) != murmur3(long), so a key literal
+    hashed at the wrong width would look in the wrong bucket."""
+    import itertools
+
+    from hypothesis import HealthCheck, given, settings
+    from hypothesis import strategies as st
+
+    key_cols = LOOKUP_KEY_SHAPES[shape]
+    names = [c for c, _ in key_cols]
+    key_ddl = ", ".join(f"{c} {t}" for c, t in key_cols)
+    ints = st.integers(-(2**31), 2**31 - 1)
+    key_st = {
+        "string": st.text(max_size=6),
+        "int": ints,
+        "long": st.integers(-(2**63), 2**63 - 1),
+        "composite": st.tuples(st.text(max_size=3), ints),
+    }[shape]
+    n = itertools.count()
+
+    def row(key):
+        return key if isinstance(key, tuple) else (key,)
+
+    @settings(max_examples=3, deadline=None, suppress_health_check=[HealthCheck.too_slow])
+    @given(data=st.data())
+    def check(data):
+        keys = data.draw(st.lists(key_st, min_size=1, max_size=12, unique=True))
+        t = LakeTable.create(
+            spark, str(tmp_path / f"lk{next(n)}"), key_cols + [("v", "string"), ("seq", "long")],
+            key_cols=names, order_col="seq", num_buckets=4,
+        )
+        ddl = key_ddl + ", v string, seq long, op string"
+        base = [row(k) + (f"b{i}", 1, "I") for i, k in enumerate(keys)]
+        t.merge(spark.createDataFrame(base, ddl), batch_id="b0")
+        t.compact_deltas()
+        # every third key updated, every third (offset 1) deleted, the rest
+        # left in base only
+        over = [
+            row(k) + (f"o{i}", 2, "UD"[i % 3]) for i, k in enumerate(keys) if i % 3 < 2
+        ]
+        t.merge(spark.createDataFrame(over, ddl), batch_id="b1")
+        snap = t.snapshot
+        assert {f.bucket == -1 for f in snap.files} == {True, False}
+
+        probe = data.draw(st.lists(st.sampled_from(keys), max_size=6))
+        probe += data.draw(st.lists(key_st, max_size=3))
+        probe_df = spark.createDataFrame([row(k) for k in probe], key_ddl)
+        got = sorted(tuple(r) for r in t.lookup(probe).collect())
+        want = sorted(tuple(r) for r in t.read().join(probe_df, names, "semi").collect())
+        assert got == want
+
+        typed = [r[0] for r in probe_df.select(t._bucket_expr(snap)).collect()]
+        assert t._literal_buckets(snap, t._key_literals(snap, probe)) == typed
+
+    check()

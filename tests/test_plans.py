@@ -59,10 +59,11 @@ def test_small_dim_join_broadcasts(spark):
     assert uses_broadcast_join(df)
 
 
-def test_merge_plan_single_data_shuffle(spark, tmp_path):
-    """The MERGE write runs with shuffle partitions == num_buckets and the
-    bucket function == shuffle placement, so the written files land one per
-    bucket with no repartition (check by file layout, the observable)."""
+def test_compact_plan_single_data_shuffle(spark, tmp_path):
+    """The compaction write (a merge-on-read merge's overlay folded to base)
+    runs with shuffle partitions == num_buckets and the bucket function ==
+    shuffle placement, so the written files land one per bucket with no
+    repartition (check by file layout, the observable)."""
     from patuha_etl_dlt_spark.cdc.envelope import PAGES_COLUMNS
     from patuha_etl_dlt_spark.lake import LakeTable
 
@@ -76,6 +77,7 @@ def test_merge_plan_single_data_shuffle(spark, tmp_path):
         rows, "_event_id long, op string, url string, warc_ts timestamp, html binary, text string, lang string"
     )
     t.merge(df, batch_id="b1")
+    assert t.compact_deltas() > 0
     files = t.snapshot.files
     per_bucket: dict[int, int] = {}
     for f in files:

@@ -522,3 +522,134 @@ def test_diff_shuffle_partitions_sized_from_table_bytes(spark, tmp_path):
     # width scales with bytes, never below the session width
     assert diff_shuffle_partitions(t, 8, target_bytes=total // 32) == 32
     assert diff_shuffle_partitions(t, 64, target_bytes=total // 32) == 64
+
+
+def test_diff_width_pin_reaches_the_write_and_apply_leaves_session_width(
+    spark, tmp_path, monkeypatch
+):
+    """A snapshot_diff pull merge writes at the table-bytes-derived diff
+    width (a bucketed merge used to re-pin its write to num_buckets, so the
+    diff join never ran at that width), and a default apply_batch merge
+    runs at the session's own shuffle width, pinning nothing."""
+    import patuha_etl_dlt_spark.cdc.snapshot_diff as sd
+    from patuha_etl_dlt_spark.cdc import CdcEngine, CheckpointStore
+    from patuha_etl_dlt_spark.lake import LakeTable
+
+    widths = []
+    orig = LakeTable._write_files
+
+    def spy(self, snap, df, *a, **kw):
+        widths.append(spark.conf.get("spark.sql.shuffle.partitions"))
+        return orig(self, snap, df, *a, **kw)
+
+    monkeypatch.setattr(LakeTable, "_write_files", spy)
+    monkeypatch.setattr(sd, "diff_shuffle_partitions", lambda table, session, **kw: 37)
+    session_width = spark.conf.get("spark.sql.shuffle.partitions")
+    assert session_width not in ("37", "4")
+
+    def source(spark_, last):
+        return spark_.createDataFrame([(k, f"v{k}") for k in range(6)], "k long, v string")
+
+    cfg = TableConfig(
+        table="sd", merge_key=("k",), cursor="", mode="snapshot_diff",
+        columns=(("k", "long"), ("v", "string")), num_buckets=4,
+    )
+    orch = SyncOrchestrator(spark, str(tmp_path / "sync"), [cfg], sources={"sd": source})
+    (r,) = orch.pull_cycle("c1")
+    assert r.status == "perfect"
+    assert widths == ["37"]
+
+    widths.clear()
+    t = LakeTable.create(
+        spark, str(tmp_path / "ap"), [("k", "long"), ("v", "string"), ("seq", "long")],
+        key_cols="k", order_col="seq", num_buckets=4,
+    )
+    eng = CdcEngine(t, CheckpointStore(str(tmp_path / "ap_cp")))
+    events = spark.createDataFrame(
+        [(i, 0, "U", i % 5, f"x{i}", i) for i in range(20)],
+        "lsn long, partition_id int, op string, k long, v string, seq long",
+    )
+    eng.apply_batch(events, batch_id="b0", offsets={0: 19}, descriptors=[])
+    assert widths == [session_width]
+    assert {r["k"] for r in t.read().collect()} == set(range(5))
+
+
+def test_decimal_cursor_two_cycles(spark, tmp_path):
+    """A DECIMAL cursor used to be stored as str(Decimal), which
+    the cursor type check then rejected on every later cycle. Decimals are
+    stored numerically now (int when integral, else the nearest float,
+    exact up to 15 significant digits), and the pull loop advances across
+    cycles."""
+    from decimal import Decimal
+
+    from pyspark.sql import functions as F
+
+    from patuha_etl_dlt_spark.cdc.orchestrator import _json_cursor
+
+    for v in (Decimal("0.1"), Decimal("12345678901234567.89"), Decimal("-2.675")):
+        c = _json_cursor(v)
+        assert isinstance(c, float) and Decimal(repr(c)) <= v
+    assert _json_cursor(Decimal("12.00")) == 12 and isinstance(_json_cursor(Decimal("12.00")), int)
+
+    upstream = {1: (Decimal("1.50"), "a"), 2: (Decimal("9.99"), "b")}
+
+    def source(spark_, last):
+        df = spark_.createDataFrame(
+            [(k, c, v) for k, (c, v) in upstream.items()], "k long, c decimal(10,2), v string"
+        )
+        return df if last is None else df.filter(F.col("c") > F.lit(last))
+
+    cfg = TableConfig(
+        table="dc", merge_key=("k",), cursor="c",
+        columns=(("k", "long"), ("c", "decimal(10,2)"), ("v", "string")), num_buckets=4,
+    )
+    orch = SyncOrchestrator(spark, str(tmp_path / "sync"), [cfg], sources={"dc": source})
+    (r1,) = orch.pull_cycle("c1")
+    assert r1.status == "perfect", r1.metrics
+    eng = orch.engine("dc")
+    assert eng.cp.cursor() == 9.99
+
+    upstream[3] = (Decimal("10.25"), "c")
+    upstream[1] = (Decimal("12.00"), "a2")
+    (r2,) = orch.pull_cycle("c2")
+    assert r2.status == "perfect", r2.metrics
+    assert r2.metrics["last_value"] == 9.99 and r2.metrics["rows_pulled"] == 2
+    assert eng.cp.cursor() == 12
+    assert {r["k"]: r["v"] for r in eng.table.read().collect()} == {1: "a2", 2: "b", 3: "c"}
+
+
+def test_wide_decimal_cursor_never_skips_a_row(spark, tmp_path):
+    """A decimal(38,20) cursor carries 21 significant digits, past what a
+    double tells apart: 2.5 and 2.5 + 1e-20 share the double 2.5. A source
+    that pushes ``c > lit(last)`` compares as double (Spark coerces
+    decimal > double), so a cursor stored as exactly 2.5 would skip the
+    larger row forever; the stored float is stepped below the value."""
+    from decimal import Decimal
+
+    from pyspark.sql import functions as F
+
+    v = Decimal("2.50000000000000000000")
+    above = v + Decimal("1E-20")
+    assert float(above) == float(v)
+    upstream = {1: (v, "a")}
+
+    def source(spark_, last):
+        df = spark_.createDataFrame(
+            [(k, c, x) for k, (c, x) in upstream.items()], "k long, c decimal(38,20), v string"
+        )
+        return df if last is None else df.filter(F.col("c") > F.lit(last))
+
+    cfg = TableConfig(
+        table="wd", merge_key=("k",), cursor="c",
+        columns=(("k", "long"), ("c", "decimal(38,20)"), ("v", "string")), num_buckets=4,
+    )
+    orch = SyncOrchestrator(spark, str(tmp_path / "sync"), [cfg], sources={"wd": source})
+    (r1,) = orch.pull_cycle("c1")
+    assert r1.status == "perfect", r1.metrics
+    eng = orch.engine("wd")
+    assert eng.cp.cursor() < 2.5
+
+    upstream[2] = (above, "b")
+    (r2,) = orch.pull_cycle("c2")
+    assert r2.status == "perfect", r2.metrics
+    assert {r["k"]: r["v"] for r in eng.table.read().collect()} == {1: "a", 2: "b"}

@@ -13,8 +13,11 @@ reference's per-value sanitizer loop could not do.
 Implementation notes (the "hard part" from SURVEY.md §7): the UDF takes
 ``binary`` in / ``string`` out through Arrow. pandas represents binary as
 object-dtype ``bytes``; we never let pandas coerce dtypes — the Series is
-mapped element-wise over compiled regexes inside one Arrow batch, so the
-per-batch overhead is one Python call per ~10k rows, not per row.
+mapped element-wise through ``extract_text_bytes`` inside one Arrow batch,
+so the per-batch overhead is one Python call per ~10k rows, not per row.
+Once batching has amortised that overhead, the per-row kernel is what is
+left: three compiled byte regexes strip markup, then ``html.unescape`` and
+a ``str.split``/``join`` whitespace collapse.
 """
 
 from __future__ import annotations
@@ -31,7 +34,6 @@ from pyspark.sql.functions import pandas_udf
 _RE_SCRIPT = re.compile(rb"(?is)<(script|style)\b.*?</\1\s*>")
 _RE_COMMENT = re.compile(rb"(?s)<!--.*?-->")
 _RE_TAG = re.compile(rb"(?s)<[^>]*>")
-_RE_WS = re.compile(r"\s+")
 
 
 def extract_text_bytes(b: bytes | None) -> str | None:
@@ -43,7 +45,12 @@ def extract_text_bytes(b: bytes | None) -> str | None:
     raw = _RE_TAG.sub(b" ", _RE_COMMENT.sub(b" ", _RE_SCRIPT.sub(b" ", bytes(b))))
     s = raw.decode("utf-8", errors="replace")
     s = _htmllib.unescape(s)
-    return _RE_WS.sub(" ", s).strip()
+    # Same string as re.sub(r"\s+", " ", s).strip(): str.split() splits on
+    # exactly the code points where str.isspace() holds, and re's str-mode
+    # \s matches exactly those (both use Py_UNICODE_ISSPACE; checked over
+    # all 0x110000 code points). On ~6 KB pages the regex took about half
+    # the kernel's time; split/join takes about a quarter of the regex's.
+    return " ".join(s.split())
 
 
 # returnType passed as a DataType object (not a DDL string) so importing

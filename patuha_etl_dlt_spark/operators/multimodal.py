@@ -223,15 +223,14 @@ def synth_png(
         # the whole raw stream with one bytes multiply instead of a
         # per-row Python loop through the predictor (the loop is pure
         # overhead here: filter 0's prediction is zero, so the filtered
-        # bytes ARE the pixel bytes). Same decoded pixels; the IDAT
-        # byte stream differs only in deflate block boundaries, which no
-        # consumer observes (n_bytes is zlib-size-dependent either way).
+        # bytes ARE the pixel bytes). Same raw stream and same default
+        # deflate level as the general path, so the same file bytes.
         raw = (bytes([0]) + bytes([fill % 256]) * (width * ch)) * height
         ihdr = struct.pack(">IIBBBBB", width, height, 8, color_type, 0, 0, 0)
         return (
             _PNG_SIG
             + _png_chunk(b"IHDR", ihdr)
-            + _png_chunk(b"IDAT", zlib.compress(raw, 1))
+            + _png_chunk(b"IDAT", zlib.compress(raw))
             + _png_chunk(b"IEND", b"")
         )
     if fill is not None:

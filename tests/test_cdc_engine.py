@@ -126,6 +126,36 @@ def test_crash_between_merge_and_checkpoint_heals(spark, tmp_path, feed):
     assert table_state(eng.table) == oracle_state(feed)
 
 
+def test_offset_filter_literal_map_matches_broadcast_join(spark, tmp_path, monkeypatch):
+    """Both _filter_new branches keep exactly the rows with lsn > offset,
+    a partition with no checkpointed offset counting as -1. LSNs sit above
+    2**31 so an int-typed map key or value would overflow."""
+    import patuha_etl_dlt_spark.cdc.engine as engine_mod
+
+    big = 2**31
+    offsets = {0: big + 5, 1: 2**40, 2: big - 10, 5: 7}
+    eng = make_engine(spark, tmp_path)
+    eng.cp.commit("seed", offsets, {})
+    rows = [
+        (p, lsn)
+        for p in (0, 1, 2, 3, 4)
+        for lsn in (-5, 0, 7, 8, big - 11, big - 10, big - 9, big + 5, big + 6, 2**40, 2**40 + 1)
+    ]
+    df = spark.createDataFrame(rows, "partition_id int, lsn long")
+    want = sorted((p, lsn) for p, lsn in rows if lsn > offsets.get(p, -1))
+
+    def kept(frame):
+        return sorted((r["partition_id"], r["lsn"]) for r in frame.collect())
+
+    literal = eng._filter_new(df)
+    assert "BroadcastExchange" not in literal._jdf.queryExecution().executedPlan().toString()
+    assert kept(literal) == want
+    monkeypatch.setattr(engine_mod, "_MAX_LITERAL_OFFSETS", 0)
+    joined = eng._filter_new(df)
+    assert kept(joined) == want
+    assert joined.columns == df.columns
+
+
 def test_duplicate_delivery_and_dup_lsn_within_batch(spark, tmp_path):
     spec = FeedSpec(n_urls=50, n_events=500, dup_rate=0.2, seed=7)
     feed = generate_pandas(spec)

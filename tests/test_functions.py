@@ -3,8 +3,12 @@
 from __future__ import annotations
 
 import datetime as dt
+import html as _htmllib
+import re
 
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from patuha_etl_dlt_spark.functions.html import extract_text, extract_text_bytes
@@ -30,6 +34,8 @@ CASES = [
     (None, None),
     ("caf\xe9 UTF: é".encode(), "caf\xe9 UTF: \xe9"),
     (b"\xff\xfebroken<][>bytes", "��broken<][>bytes"),
+    ("<p>\u3000a\u3000\u3000b\u3000</p>".encode(), "a b"),  # ideographic space
+    (b"\x1ca\x1c\x1db\x1f", "a b"),  # ASCII separators count as whitespace
 ]
 
 
@@ -41,6 +47,45 @@ def test_extract_text_bytes_cases(raw, want):
 def test_extract_text_bytes_is_deterministic():
     b = b"<html><body>x&gt;y</body></html>"
     assert extract_text_bytes(b) == extract_text_bytes(bytearray(b)) == "x>y"
+
+
+# Frozen copy of the kernel as it stood with a regex whitespace collapse.
+# The shipped kernel collapses with str.split/join instead; this oracle pins
+# that the swap is byte-identical.
+_OLD_SCRIPT = re.compile(rb"(?is)<(script|style)\b.*?</\1\s*>")
+_OLD_COMMENT = re.compile(rb"(?s)<!--.*?-->")
+_OLD_TAG = re.compile(rb"(?s)<[^>]*>")
+_OLD_WS = re.compile(r"\s+")
+
+
+def _regex_kernel(b: bytes | None) -> str | None:
+    if b is None:
+        return None
+    raw = _OLD_TAG.sub(b" ", _OLD_COMMENT.sub(b" ", _OLD_SCRIPT.sub(b" ", bytes(b))))
+    s = raw.decode("utf-8", errors="replace")
+    s = _htmllib.unescape(s)
+    return _OLD_WS.sub(" ", s).strip()
+
+
+_HTML_PIECES = st.sampled_from(
+    [
+        "<p>", "</p>", "<b class='x'>", "<br/>", "<", ">", "&", " ", "\t", "\n", "\r",
+        "\x0b", "\x0c", "<script>var a = '<b>';</script>", "<SCRIPT >x</script >",
+        "<style>p { }</style>", "<script>", "<!-- c -->", "<!--", "-->",
+        "&nbsp;", "&#12288;", "&#x2028;", "&#133;", "&#x85;", "&amp;", "&lt;p&gt;", "&bogus;",
+        "\x1c", "\x1d", "\x1e", "\x1f", "\x85", "\xa0", "\u1680", "\u2000", "\u200b",
+        "\u2028", "\u2029", "\u202f", "\u3000", "\ufeff", "word", "é",
+    ]
+)
+_HTML_LIKE = st.lists(st.one_of(_HTML_PIECES, st.text(max_size=8)), max_size=40).map(
+    lambda parts: "".join(parts).encode()
+)
+
+
+@settings(max_examples=400, deadline=None)
+@given(b=st.one_of(st.binary(max_size=300), _HTML_LIKE))
+def test_extract_text_bytes_matches_regex_kernel(b):
+    assert extract_text_bytes(b) == _regex_kernel(b)
 
 
 def test_udf_matches_kernel_byte_identically(spark):

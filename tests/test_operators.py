@@ -187,26 +187,41 @@ def _has_pil() -> bool:
         return False
 
 
-def _synth_png(width: int, height: int) -> bytes:
-    """A valid 8-bit grayscale PNG via stdlib zlib/struct only (no codec
-    libs needed to WRITE one) — deterministic gradient pixels."""
+def _png_file(width: int, height: int, color_type: int, raw: bytes) -> bytes:
+    """PNG bytes from an already-filtered scanline stream, built with stdlib
+    zlib/struct at zlib's default level — independent of the package."""
     import struct as _s
     import zlib
 
     def chunk(tag: bytes, data: bytes) -> bytes:
         return _s.pack(">I", len(data)) + tag + data + _s.pack(">I", zlib.crc32(tag + data))
 
-    ihdr = _s.pack(">IIBBBBB", width, height, 8, 0, 0, 0, 0)  # 8-bit gray
-    raw = b"".join(
-        b"\x00" + bytes((x * 7 + y * 13) % 256 for x in range(width))
-        for y in range(height)
-    )
+    ihdr = _s.pack(">IIBBBBB", width, height, 8, color_type, 0, 0, 0)
     return (
         b"\x89PNG\r\n\x1a\n"
         + chunk(b"IHDR", ihdr)
         + chunk(b"IDAT", zlib.compress(raw))
         + chunk(b"IEND", b"")
     )
+
+
+def _synth_png(width: int, height: int) -> bytes:
+    """A valid 8-bit grayscale PNG via stdlib zlib/struct only (no codec
+    libs needed to WRITE one) — deterministic gradient pixels."""
+    raw = b"".join(
+        b"\x00" + bytes((x * 7 + y * 13) % 256 for x in range(width))
+        for y in range(height)
+    )
+    return _png_file(width, height, 0, raw)  # 8-bit gray
+
+
+def test_synth_png_solid_fast_path_matches_default_level_png():
+    """The solid filter-0 fast path must emit the same bytes as a PNG built
+    independently at zlib's default level, like synth_png's general path."""
+    from patuha_etl_dlt_spark.operators.multimodal import synth_png
+
+    raw = (b"\x00" + bytes([42]) * (9 * 3)) * 5  # RGB: 3 channels per pixel
+    assert synth_png(9, 5, fill=42) == _png_file(9, 5, 2, raw)
 
 
 @pytest.mark.skipif(_has_pil(), reason="PIL present: 'pil' kernel is live, not gated")
